@@ -3,16 +3,30 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Build-lifecycle instrumentation for the session-memoized shared
-  * artifacts (cluster stores, shingle/winnow indexes, trained models,
-  * prepared graphs, basket frames, …).
+import org.apache.spark.sql.SparkSession
+
+/** The one memo for the engine's shared artifacts (cluster stores,
+  * shingle/winnow indexes, trained models, prepared graphs, basket
+  * frames, …) and the build-lifecycle record behind it.
   *
-  * Round 14 proved the failure mode this registry exists to expose:
+  * [[memo]] keeps one slot per key. A build runs under that key's own
+  * lock, never inside a map operation, so one artifact's build may
+  * `memo` another (the wave stores build the shared ingest base from
+  * inside their own build). Two lifetimes:
+  *
+  *   - JVM-scoped (no session): disk-store roots and driver-side models
+  *     are kept for the life of the JVM;
+  *   - session-bound: persisted frames, the shingle index, prepared
+  *     graphs and LPA labels hold handles on the SparkSession that built
+  *     them, so a call from a different session rebuilds (a same-JVM
+  *     session restart would otherwise hand back handles on a dead
+  *     context; dropping the old reference is the whole cleanup).
+  *
+  * Round 14 proved the failure mode the record exists to expose:
   * `q_item_cf_topk` silently paid an ~11 s cold rebuild whenever other
   * queries' persists evicted the shared basket frame mid-bench — the
   * cost was charged to an innocent query and NOTHING recorded that a
-  * rebuild had happened. Every memoization point now routes its build
-  * lambda through [[timed]], so:
+  * rebuild had happened. Every build is therefore timed:
   *
   *   - build count + wall seconds are recorded per artifact key;
   *   - any key building more than once in a JVM logs a LOUD stderr
@@ -23,17 +37,16 @@ import java.util.concurrent.atomic.AtomicInteger
   *     `ArtifactBuildOnceSpec` asserts a full `SparkEntry.queries`
   *     sweep builds every artifact exactly once.
   *
-  * Scope note: [[timed]] observes the MEMOIZER's build lambda. For
-  * disk stores ([[SparkEntry.artifact]]) that lambda runs the whole
-  * build job, so the seconds are the true build cost. For persisted
-  * DataFrames (`memoDf`) the lambda constructs the plan and calls
-  * `.persist()` — materialization is lazy and rides the FIRST
+  * Scope note: the seconds are the build lambda's own (nested builds
+  * excluded). For disk stores that
+  * lambda runs the whole build job, so the seconds are the true build
+  * cost. For persisted DataFrames the lambda constructs the plan and
+  * calls `.persist()` — materialization is lazy and rides the FIRST
   * consumer's action, so block-level cache eviction recomputes
-  * silently without re-entering the memoizer. That second failure
-  * mode is covered by [[Bench]]'s storage snapshots
-  * (`sc.getRDDStorageInfo` diffs between queries → spill/drop
-  * events), not by these counters; the two instruments are designed
-  * as a pair.
+  * silently without re-entering the memo. That second failure mode is
+  * covered by [[Bench]]'s storage snapshots (`sc.getRDDStorageInfo`
+  * diffs between queries → spill/drop events), not by these counters;
+  * the two instruments are designed as a pair.
   */
 object ArtifactRegistry {
 
@@ -46,13 +59,50 @@ object ArtifactRegistry {
   private val events =
     new java.util.concurrent.ConcurrentLinkedQueue[BuildEvent]()
 
-  /** Wrap a memoizer's build lambda: count it, time it, and shout on
-    * any build after the first. Call this INSIDE the memoizer's
-    * compute/computeIfAbsent lambda so cache hits record nothing. */
-  def timed[T](key: String)(build: => T): T = {
+  /** One memo entry; its monitor is the key's build lock. */
+  private final class Slot {
+    var value: Option[Any] = None
+    var session: Option[SparkSession] = None
+  }
+  private val slots = new ConcurrentHashMap[String, Slot]()
+
+  /** The artifact under `key`, built by `build` on first use. With a
+    * `session`, the entry is bound to it and rebuilt when called from a
+    * different session; without one it lives as long as the JVM. */
+  def memo[T](key: String, session: Option[SparkSession] = None)
+             (build: => T): T = {
+    val slot = slots.computeIfAbsent(key, _ => new Slot)
+    slot.synchronized {
+      val live = slot.value.isDefined &&
+        session.forall(s => slot.session.exists(_ eq s))
+      if (!live) {
+        slot.value = Some(timed(key)(build))
+        slot.session = session
+      }
+      slot.value.get.asInstanceOf[T]
+    }
+  }
+
+  /** Nanoseconds this thread has spent in builds nested inside the
+    * build now running on it. */
+  private val nestedNs = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  /** Count and time one build, and shout on any build after the first.
+    * The recorded seconds are the build's own: builds it triggers through
+    * [[memo]] are timed under their own keys and subtracted, so the
+    * per-key seconds sum to the total build time. */
+  private def timed[T](key: String)(build: => T): T = {
+    val outer = nestedNs.get
+    nestedNs.set(0L)
     val t0 = System.nanoTime()
-    val out = build
-    val sec = (System.nanoTime() - t0) / 1e9
+    var inner = 0L
+    val out =
+      try build
+      finally {
+        inner = nestedNs.get
+        nestedNs.set(outer + (System.nanoTime() - t0))
+      }
+    val sec = (System.nanoTime() - t0 - inner) / 1e9
     val nth = counts.computeIfAbsent(key, _ => new AtomicInteger(0))
       .incrementAndGet()
     totalSecs.merge(key, sec, (a, b) => a + b)

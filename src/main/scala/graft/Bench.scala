@@ -1,17 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 object Bench {
-
-  /** Force full evaluation of every output row WITHOUT an aggregating
-    * action: `count()` lets Catalyst prune all columns (a projection-only
-    * query then measures ~nothing and expression cost is under-weighted).
-    * Draining the executed plan's internal-row iterator materializes every
-    * column of every row on the executors — an honest no-op sink with no
-    * driver collect. */
-  private def drain(df: DataFrame): Unit =
-    df.queryExecution.toRdd.foreachPartition { it =>
-      while (it.hasNext) it.next()
-    }
 
   /** Fixed-work ambient-load probe: a single-thread dependent-LCG busy loop
     * (~100 ms on an unloaded core, zero allocation, zero I/O) timed
@@ -86,23 +75,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the recorded protocol (BASELINE.md runs local[32]);
-    // the driver sets the env var explicitly either way
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, shuffle service, parquet footer reads) so
-    // startup cost isn't attributed to whichever query happens to run first.
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    SparkEntry.queries.get("q_projection")
-      .foreach(fn => try drain(fn(spark, sfDir)) catch { case _: Throwable => })
+    val spark = Session.local()
+    Session.warm(spark, sfDir)
     // A failed query records the NEGATED elapsed time — a broken query must
     // stay distinguishable from a fast one in the JSON.
     // Best-of-2 per query, passes INTERLEAVED (all queries pass 1, then all
@@ -154,12 +128,12 @@ object Bench {
     storBefore.keysIterator.foreach(id => seenCount.update(id, 1))
     val passTimes = (1 to passes).map { pass =>
       calibrations += calibrate()
-      parCalibrations += calibratePar(cpus.toInt)
+      parCalibrations += calibratePar(Session.cpus)
       val gc0 = gcMillis()
       val res = names.map { name =>
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        val ok = try { drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+        val ok = try { Session.drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
         val sec = (System.nanoTime() - t0) / 1e9
         val storAfter = storageSnapshot(spark)
         storAfter.keysIterator.foreach(id =>
@@ -195,16 +169,6 @@ object Bench {
       name -> (best, passIdx + 1, calibrations(passIdx))
     }.toMap
     val results = detail.map { case (k, (t, _, _)) => k -> t }
-    // Continuity metric: the same queries under the round-1 `.count()`
-    // methodology (Catalyst prunes to counts — under-measures projection
-    // cost, but directly comparable with earlier rounds' totals).
-    calibrations += calibrate()
-    val countTotal = SparkEntry.queries.values.map { fn =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) sec else -sec
-    }.sum
     // ms precision: keeps the one-line JSON compact enough to survive the
     // driver's stdout tail window even at 130+ queries (full-precision
     // floats pushed the line past it); the file below keeps ms too — ±1 ms
@@ -221,9 +185,9 @@ object Bench {
       s"\"" + name + s"\":{\"time\":${r3(t)},\"pass\":$p,\"cal\":${r3(c)}}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // calibration: fixed-work probe seconds, one before each drain pass and
-    // one before the count-method sweep; spread = max/min. A spread near 1.0
-    // means a quiet box; >>1 flags which passes ran under ambient load.
+    // calibration: fixed-work probe seconds, one before each drain pass;
+    // spread = max/min. A spread near 1.0 means a quiet box; >>1 flags
+    // which passes ran under ambient load.
     val calJson = calibrations.map(r3).mkString("[", ",", "]")
     val calSpread =
       if (calibrations.nonEmpty) calibrations.max / calibrations.min else 1.0
@@ -257,7 +221,7 @@ object Bench {
     // reasonable tail window; the committed bench_out.json carries the
     // complete form including per-query {time, pass, cal} provenance.
     val summary =
-      s""""metric":"total","value":${r3(total)},"unit":"sec","protocol":"v2.1-sorted-min","passes":$passes,"agg":"min","count_method_total":${r3(countTotal)},"calibration":$calJson,"calibration_par":$pcalJson,"gc_secs_per_pass":$gcJson,"artifact_rebuilds":$artifactRebuilds,"artifact_build_secs":${r3(artifactSecs)},"storage_drops":$dropCount,"storage_spills":$spillCount,"calibration_spread":${r3(calSpread)},"n_queries":${names.size},"sf":"$sfDir""""
+      s""""metric":"total","value":${r3(total)},"unit":"sec","protocol":"v2.1-sorted-min","passes":$passes,"agg":"min","calibration":$calJson,"calibration_par":$pcalJson,"gc_secs_per_pass":$gcJson,"artifact_rebuilds":$artifactRebuilds,"artifact_build_secs":${r3(artifactSecs)},"storage_drops":$dropCount,"storage_spills":$spillCount,"calibration_spread":${r3(calSpread)},"n_queries":${names.size},"sf":"$sfDir""""
     println(s"""{"queries":$qs,$summary}""")
     val json =
       s"""{"queries":$qs,"query_detail":$qd,"artifacts":$artJson,"storage_churn":$churnJson,$summary}"""

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Empirical scale audit: times a fixed set of the engine's most
   * expensive queries against one sf dir and reports per-query best-of-N
@@ -22,11 +21,6 @@ object ScaleAudit {
     "q_containment_pairs", "q_spearman", "q_rfm", "q_bfs_hops", "q_kcore",
     "q_cut_spans", "q_brunner_munzel", "q_lm_dirichlet",
     "q_lsh_recall_audit", "q_simhash_near_dups", "q_bm25_batch")
-
-  private def drain(df: DataFrame): Unit =
-    df.queryExecution.toRdd.foreachPartition { it =>
-      while (it.hasNext) it.next()
-    }
 
   private def usedHeapMb(): Long = {
     System.gc()
@@ -52,21 +46,9 @@ object ScaleAudit {
       if (args.length > 1 && args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_AUDIT_PASSES", "2").toInt max 1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session + codegen warmup, same as Bench
-    spark.read.parquet(s"$dir/region.parquet").count()
-    SparkEntry.queries.get("q_projection")
-      .foreach(fn => try drain(fn(spark, dir)) catch { case _: Throwable => })
+    val spark = Session.local()
+    Session.warm(spark, dir)
 
     val heapStart = usedHeapMb()
     // pass 1 pays shared-artifact builds (reported separately below);
@@ -75,7 +57,7 @@ object ScaleAudit {
       names.map { name =>
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        val ok = try { drain(fn(spark, dir)); true }
+        val ok = try { Session.drain(fn(spark, dir)); true }
         catch { case _: Throwable => false }
         val sec = (System.nanoTime() - t0) / 1e9
         name -> (if (ok) sec else -sec)

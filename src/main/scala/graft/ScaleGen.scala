@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic k× replication of a testdata sf dir into a scratch dir —
@@ -49,15 +48,7 @@ object ScaleGen {
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
     require(k >= 1 && k <= 26, s"k=$k out of range (text rotation needs k<=26)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase
@@ -81,7 +72,7 @@ object ScaleGen {
         d
       }
       replicas.reduce(_ union _)
-        .repartition(cpus.toInt)
+        .repartition(Session.cpus)
         .write.mode("overwrite").parquet(s"$dst/$table.parquet")
       println(s"SCALEGEN $table x$k done")
     }

@@ -770,7 +770,8 @@ object DedupOps {
     // job. Each round persists + materializes, then the previous round's
     // cache is released, so peak cache = edges + two label generations.
     // The next round is REBASED on the persisted RDD (LogicalRDD leaf —
-    // the same materializeCut discipline as [[connectedComponentsStar]]):
+    // [[graft.ops.Iterate.cut]], the discipline [[connectedComponentsStar]]
+    // applies with its checksum):
     // persist() alone does not truncate the logical plan, and with two
     // label references per round the un-cut plan TREE doubles every
     // iteration — analysis walks it as a tree, so high iteration counts
@@ -786,21 +787,16 @@ object DedupOps {
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id"))
     var handle: Option[DataFrame] = None
-    var i = 0
-    while (i < iterations) {
-      val next = labels.join(
+    for (_ <- 1 to iterations) {
+      val (next, nextHandle) = graft.ops.Iterate.cut(labels.join(
           edges.join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
             .groupBy(col("a").as("id")).agg(min(col("nl")).as("min_nbr")),
           Seq("id"), "left")
         .select(col("id"),
-          least(col("label"), coalesce(col("min_nbr"), col("label"))).as("label"))
-        .persist()
-      next.count()                            // materialize this round
+          least(col("label"), coalesce(col("min_nbr"), col("label"))).as("label")))
       handle.foreach(_.unpersist(blocking = false))
-      // rebase on the persisted blocks: constant-size plan per round
-      labels = next.sparkSession.createDataFrame(next.rdd, next.schema)
-      handle = Some(next)
-      i += 1
+      labels = next
+      handle = Some(nextHandle)
     }
     val result =
       if (iterations > 0) {

@@ -331,16 +331,22 @@ object GraphOps {
 
   /** Materialize one iteration's frame and TRULY cut its lineage:
     * eager `localCheckpoint` truncates both the logical plan AND the
-    * physical RDD dependency chain. persist()+rdd-rebase (the
-    * [[graft.ext.DedupOps.connectedComponentsStar]] materializeCut)
-    * truncates only the logical plan — each round's serialized task
-    * binary still references the full RDD object graph of every
-    * previous round (ShuffleDependency links are not pruned at stage
-    * boundaries), and ~50 accumulated rounds overflow the task
+    * physical RDD dependency chain. persist()+rdd-rebase
+    * ([[Iterate.cut]]) truncates only the logical plan — each round's
+    * serialized task binary still references the full RDD object graph
+    * of every previous round (ShuffleDependency links are not pruned at
+    * stage boundaries), and ~50 accumulated rounds overflow the task
     * DESERIALIZER's stack (pinned by CdcStatsSpec's 50-iteration
     * PageRank test). Returns the checkpointed frame plus a release
     * thunk that frees the checkpoint blocks (the LogicalRDD leaf's
-    * RDD) once the next round has materialized. */
+    * RDD) once the next round has materialized.
+    *
+    * Local mode only: the checkpoint blocks are unreplicated executor
+    * storage, and releasing the previous round drops the lineage that
+    * could rebuild them. In local mode the driver is the only executor,
+    * so a lost block means a lost application anyway; on a cluster an
+    * executor lost mid-loop would fail the query ("checkpoint block not
+    * found") instead of recomputing. */
   private def checkpointCut(df: DataFrame): (DataFrame, () => Unit) = {
     val p = df.localCheckpoint()
     val release = () => p.queryExecution.analyzed.foreach {
@@ -377,13 +383,8 @@ object GraphOps {
   def kCoreBounded(g: PreparedGraph, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 50,
       s"bad k=$k rounds=$rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
     var (s, sHandle) =
-      materializeCut(g.bi.select(col("u").as("n")).distinct())
+      Iterate.cut(g.bi.select(col("u").as("n")).distinct())
     for (_ <- 1 to rounds) {
       val surv = g.bi
         .join(s.select(col("n").as("u")), "u")
@@ -391,7 +392,7 @@ object GraphOps {
         .groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("n")
-      val (next, nextHandle) = materializeCut(surv)
+      val (next, nextHandle) = Iterate.cut(surv)
       sHandle.unpersist(blocking = false)
       s = next
       sHandle = nextHandle
@@ -468,17 +469,12 @@ object GraphOps {
   /** [[labelPropagation]] off a shared [[PreparedGraph]]. */
   def labelPropagation(g: PreparedGraph, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"bad rounds $rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (labels, handle) = materializeCut(
+    var (labels, handle) = Iterate.cut(
       g.nodes.withColumn("label", col("node")))
     for (_ <- 1 to rounds) {
       // every node appears as some v (bi is symmetric), so the vote
       // covers the whole node set — no keep-old-label branch needed
-      val (next, nextHandle) = materializeCut(
+      val (next, nextHandle) = Iterate.cut(
         g.bi.join(labels, g.bi("u") === labels("node"))
           .select(col("v").as("node"), col("label"))
           .groupBy("node", "label").agg(count(lit(1)).as("c"))
@@ -579,17 +575,12 @@ object GraphOps {
   def bfsHops(g: PreparedGraph,
               seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"bad rounds $rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (dist, handle) = materializeCut(
+    var (dist, handle) = Iterate.cut(
       seeds.select(col(seedCol).as("node")).distinct()
         .filter(col("node").isNotNull)
         .withColumn("hop", lit(0L)))
     for (_ <- 1 to rounds) {
-      val (next, nextHandle) = materializeCut(
+      val (next, nextHandle) = Iterate.cut(
         g.bi.join(dist, g.bi("u") === dist("node"))
           .select(col("v").as("node"), (col("hop") + 1).as("hop"))
           .unionAll(dist.select(col("node"), col("hop")))
